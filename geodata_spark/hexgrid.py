@@ -273,8 +273,12 @@ def _pack_ijk(face: np.ndarray, i: np.ndarray, j: np.ndarray, k: np.ndarray,
         di, dj, dk = np.clip(di, 0, 2), np.clip(dj, 0, 2), np.clip(dk, 0, 2)
         digits[:, rr - 1] = _DIGIT[di, dj, dk]
 
-    # res-0 ijk components are small on the owning face; clip to the
-    # 2-bit field (faraway garbage can only arise from NaN input)
+    # precondition: the res-0 IJK fits the 2-bit field (components
+    # 0-3), i.e. the cell lies on or just off its own face — true for
+    # argmax-face encodes and for hex7_polyfill's reachable cells.
+    # Callers must not pass lattice cells far off the face (or NaN
+    # coordinates): the clip below aliases them onto another cell's id
+    # instead of failing.
     i0, j0, k0 = np.clip(i, 0, 3), np.clip(j, 0, 3), np.clip(k, 0, 3)
     out = (
         (np.int64(res) << np.int64(57))
@@ -580,37 +584,6 @@ def hex7_local_cells_udf(res: int, margin_rad: float):
 # polygon polyfill (hex-grain zone cover)
 # ---------------------------------------------------------------------------
 
-def _local_cells_in_bbox(
-    face: int, lat0: float, lat1: float, lon0: float, lon1: float,
-    res: int, pad_cells: float = 1.5,
-) -> np.ndarray:
-    """All face-``face`` lattice cells whose center lies in the padded
-    bbox — exact axial-range enumeration in the face plane (no sampling
-    pitch to get wrong)."""
-    las = np.linspace(lat0, lat1, 9)
-    los = np.linspace(lon0, lon1, 9)
-    gla, glo = np.meshgrid(las, los, indexing="ij")
-    x, y = _geo_to_forced_face_xy(gla.ravel(), glo.ravel(), face)
-    i, j, k = _face_xy_to_ijk(x, y, res)
-    ai, aj = i - k, j - k
-    p = int(np.ceil(pad_cells)) + max(
-        int(ai.max() - ai.min()), int(aj.max() - aj.min())
-    ) // 8 + 2  # corner-grid spacing in cells, plus the pad
-    ais = np.arange(ai.min() - p, ai.max() + p + 1)
-    ajs = np.arange(aj.min() - p, aj.max() + p + 1)
-    bi, bj = np.meshgrid(ais, ajs, indexing="ij")
-    bi, bj = bi.ravel(), bj.ravel()
-    ni, nj, nk = _ijk_normalize(bi, bj, np.zeros_like(bi))
-    ids = _pack_ijk(np.full(len(ni), np.int64(face)), ni, nj, nk, res)
-    cla, clo = hex7_center_np(ids)
-    pad_deg = pad_cells * _SQRT7 ** (-res) * _RES0_U * 60.0  # generous
-    keep = (
-        (cla >= lat0 - pad_deg) & (cla <= lat1 + pad_deg)
-        & (clo >= lon0 - pad_deg) & (clo <= lon1 + pad_deg)
-    )
-    return ids[keep]
-
-
 def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]:
     """Classify hex cells against a polygon: (full_ids, boundary_ids).
 
@@ -618,17 +591,28 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
     contract — ``full`` cells are provably inside, ``boundary`` cells
     need the exact per-point PIP, everything else is provably outside —
     so a membership join built on this cover is EXACT at hex grain.
+    Ids are unique: no cell appears twice, nor in both arrays.
 
-    Face-edge correctness: a point's canonical token is a cell of its
-    argmax face's lattice, so the cover enumerates EVERY face lattice
-    present near the polygon (``hex7_faces_np`` over the bbox with a
-    2-cell margin) and classifies each face's cells independently; a
-    cell id embeds its face, so cross-face rows are distinct keys and a
-    point still joins at most once per zone.  Classification is
-    conservative: any ring edge within 1.0× the cell's own max
-    neighbor-center distance (≥ 1.7× circumradius) marks it boundary;
-    remaining cells are uniform and one vectorized center PIP decides
-    full/outside.  Runs on the driver; zones are small, output
+    Only cells a point can encode to are emitted.  A point's token is a
+    cell of its argmax face's lattice, so per face ``f`` near the
+    polygon (``hex7_faces_np`` over the bbox) the face's axial lattice
+    range over the bbox is enumerated in face-local IJK, and a cell is
+    kept only if ``f`` is within a 2.5-lattice-step margin of its
+    centre's best face.  That margin exceeds twice the cell's arc
+    circumradius (gnomonic distances bound arc distances), so by the
+    triangle inequality every point of a cell whose argmax face is
+    ``f`` passes — the filter drops only cells no point can reach, and
+    every kept cell has a representable res-0 IJK.  A cell id embeds
+    its face, so cross-face rows are distinct keys and a point still
+    joins at most once per zone.
+
+    Classification is conservative: any ring edge within 1.0× the
+    cell's own max neighbour-centre distance (≥ 1.7× circumradius)
+    marks it boundary; remaining cells are uniform and one vectorized
+    centre PIP decides full/outside.  Centres and neighbour radii come
+    straight from the IJK arrays (no pack/decode round trip); only kept
+    cells are packed, once.  At res 5 the ``ZONES`` catalog covers to
+    83,471 rows.  Runs on the driver; zones are small, output
     broadcasts (same scale shape as the square cover).
     """
     from geodata_spark import geometry
@@ -636,36 +620,52 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
     allv = np.vstack(rings)
     lat0, lat1 = float(allv[:, 1].min()), float(allv[:, 1].max())
     lon0, lon1 = float(allv[:, 0].min()), float(allv[:, 0].max())
-    las = np.linspace(lat0, lat1, 9)
-    los = np.linspace(lon0, lon1, 9)
-    gla, glo = np.meshgrid(las, los, indexing="ij")
-    # faces whose lattice a point in the (padded) bbox might use.
+    gla, glo = np.meshgrid(np.linspace(lat0, lat1, 9), np.linspace(lon0, lon1, 9),
+                           indexing="ij")
+    gla, glo = gla.ravel(), glo.ravel()
+    step = _RES0_U * _SQRT7 ** (-res)  # one lattice step, gnomonic radians
+    cell_margin = 2.5 * step
+    # faces whose lattice a point in the bbox might use.
     # hex7_faces_np guarantees a point p's argmax face is inside a
     # sample's mask only when margin >= 2*dist(p, sample), so the
     # margin must scale with the 9x9 SAMPLE SPACING (a fixed cell-size
     # margin under-covers large zones near icosahedron face edges and
-    # would silently drop member points from the cover) — plus the
-    # 2-cell term for the lattice fuzz itself
+    # would silently drop member points from the cover)
     samp_diag = math.radians(
         math.hypot((lat1 - lat0) / 8.0, (lon1 - lon0) / 8.0)
     )
-    margin = 2.5 * _RES0_U * _SQRT7 ** (-res) + samp_diag
-    faces = np.nonzero(hex7_faces_np(gla.ravel(), glo.ravel(), margin).any(axis=0))[0]
+    faces = np.nonzero(
+        hex7_faces_np(gla, glo, cell_margin + samp_diag).any(axis=0)
+    )[0]
+    pad_deg = 1.5 * step * 60.0  # 1.5 cells, generous degree scale
+    nb_offs = _disk_offsets(1)[1:]
 
     fulls, bounds = [], []
-    for f in faces:
-        cand = _local_cells_in_bbox(int(f), lat0, lat1, lon0, lon1, res)
-        if len(cand) == 0:
-            continue
-        clat, clon = hex7_center_np(cand)
-        # per-cell conservative radius: max neighbor-center distance in
+    for f in faces.tolist():
+        # axial range of face f's lattice over the bbox: the 9x9 corner
+        # grid's extent plus its spacing in cells plus the pad
+        x, y = _geo_to_forced_face_xy(gla, glo, f)
+        i, j, k = _face_xy_to_ijk(x, y, res)
+        ai, aj = i - k, j - k
+        p = 4 + max(int(ai.max() - ai.min()), int(aj.max() - aj.min())) // 8
+        bi, bj = np.meshgrid(np.arange(ai.min() - p, ai.max() + p + 1),
+                             np.arange(aj.min() - p, aj.max() + p + 1),
+                             indexing="ij")
+        bi, bj = bi.ravel(), bj.ravel()
+        clat, clon = _face_ijk_to_geo(res, f, bi, bj, 0)
+        keep = (
+            (clat >= lat0 - pad_deg) & (clat <= lat1 + pad_deg)
+            & (clon >= lon0 - pad_deg) & (clon <= lon1 + pad_deg)
+        )
+        keep[keep] = hex7_faces_np(clat[keep], clon[keep], cell_margin)[:, f]
+        bi, bj, clat, clon = bi[keep], bj[keep], clat[keep], clon[keep]
+        # per-cell conservative radius: max neighbour-centre distance in
         # degree space (>= sqrt(3)x circumradius; 1.0x of it is safe)
-        nb = hex7_local_disk_np(cand, 1)[:, 1:]
-        rad = np.zeros(len(cand))
-        for d in range(nb.shape[1]):
-            nla, nlo = hex7_center_np(nb[:, d])
+        rad = np.zeros(len(bi))
+        for di, dj in nb_offs:
+            nla, nlo = _face_ijk_to_geo(res, f, bi + di, bj + dj, 0)
             rad = np.maximum(rad, np.hypot(nla - clat, nlo - clon))
-        near = np.zeros(len(cand), dtype=bool)
+        near = np.zeros(len(bi), dtype=bool)
         for ring in rings:
             closed = np.vstack([np.asarray(ring, dtype=np.float64), ring[:1]])
             for e in range(len(closed) - 1):
@@ -673,14 +673,15 @@ def hex7_polyfill(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.nda
                 dx, dy = x1 - x0, y1 - y0
                 L2 = dx * dx + dy * dy
                 if L2 == 0.0:
-                    t = np.zeros(len(cand))
+                    t = np.zeros(len(bi))
                 else:
                     t = np.clip(((clon - x0) * dx + (clat - y0) * dy) / L2, 0.0, 1.0)
                 d2 = (clon - (x0 + t * dx)) ** 2 + (clat - (y0 + t * dy)) ** 2
                 near |= d2 <= rad * rad
         inside = geometry.points_in_rings(clon, clat, rings)
-        fulls.append(cand[inside & ~near])
-        bounds.append(cand[near])
+        ids = _pack_ijk(np.full(len(bi), np.int64(f)), *_ijk_normalize(bi, bj, 0), res)
+        fulls.append(ids[inside & ~near])
+        bounds.append(ids[near])
     return np.concatenate(fulls), np.concatenate(bounds)
 
 

@@ -22,6 +22,9 @@ reference's per-boundary-pixel geometry_mask test (``mask.py:593-599``).
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -105,8 +108,41 @@ def parse_geo_spans(docs: DataFrame, kinds: tuple[str, ...] = ("geo",)) -> DataF
     )
 
 
-_COVER_CACHE: dict[tuple, list] = {}
-_COVER_DF_CACHE: dict[tuple, "DataFrame"] = {}
+# Cover artifacts are memoized with a small fixed bound: a process
+# that plans against many zone catalogs (or sessions) must not retain
+# every cover it ever built.
+_COVER_CACHE_SIZE = 8
+
+
+class _LRU:
+    """Thread-safe map keeping the ``_COVER_CACHE_SIZE`` most recently
+    used entries (lineage runs partitions on a thread pool, so plan
+    builds may share it)."""
+
+    def __init__(self) -> None:
+        self._items: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._items)
+
+    def get(self, key: tuple):
+        with self._lock:
+            hit = self._items.get(key)
+            if hit is not None:
+                self._items.move_to_end(key)
+            return hit
+
+    def put(self, key: tuple, value) -> None:
+        with self._lock:
+            self._items[key] = value
+            self._items.move_to_end(key)
+            while len(self._items) > _COVER_CACHE_SIZE:
+                self._items.popitem(last=False)
+
+
+_COVER_CACHE = _LRU()     # (zones, res, grain) → cover frame
+_COVER_DF_CACHE = _LRU()  # (session, zones, res, grain) → DataFrame
 
 
 def _zones_key(zones: dict[str, list[np.ndarray]]) -> str:
@@ -121,29 +157,39 @@ def _zones_key(zones: dict[str, list[np.ndarray]]) -> str:
     return h.hexdigest()
 
 
-def _cover_rows(zones: dict[str, list[np.ndarray]], res: int, grain: str = "grid") -> list:
-    """Memoized cover planning: the cover of a zone set at a resolution
-    is a deterministic plan artifact (like a prepared statement) —
-    real deployments build it once per zone catalog and reuse it across
-    every query, so repeated plan builds must not re-run the planner.
-    ``grain="hex"`` plans the cover on the aperture-7 hexagonal index
-    (hexgrid.hex7_polyfill — same full/boundary contract)."""
+def _cover_frame(zones: dict[str, list[np.ndarray]], res: int, grain: str = "grid") -> pd.DataFrame:
+    """Memoized cover planning → (zone_id, cell, boundary) columns.
+
+    The cover of a zone set at a resolution is a deterministic plan
+    artifact (like a prepared statement) — real deployments build it
+    once per zone catalog and reuse it across every query, so repeated
+    plan builds must not re-run the planner.  ``grain="hex"`` plans the
+    cover on the aperture-7 hexagonal index (hexgrid.hex7_polyfill —
+    same full/boundary contract).  Built from per-zone numpy columns,
+    never per-cell Python objects."""
     key = (_zones_key(zones), res, grain)
-    rows = _COVER_CACHE.get(key)
-    if rows is None:
+    frame = _COVER_CACHE.get(key)
+    if frame is None:
         if grain == "hex":
             from geodata_spark import hexgrid as HG
 
             cover_fn = lambda rings: HG.hex7_polyfill(rings, res)  # noqa: E731
         else:
             cover_fn = lambda rings: geometry.polygon_cover(rings, res)  # noqa: E731
-        rows = []
+        zids, cells_, bounds = [], [], []
         for zid, rings in zones.items():
             full, boundary = cover_fn(rings)
-            rows.extend((zid, int(c), False) for c in full)
-            rows.extend((zid, int(c), True) for c in boundary)
-        _COVER_CACHE[key] = rows
-    return rows
+            n_full, n = len(full), len(full) + len(boundary)
+            zids.append(np.full(n, zid, dtype=object))
+            cells_.append(np.concatenate([full, boundary]))
+            bounds.append(np.arange(n) >= n_full)
+        frame = pd.DataFrame({
+            "zone_id": np.concatenate(zids),
+            "cell": np.concatenate(cells_),
+            "boundary": np.concatenate(bounds),
+        })
+        _COVER_CACHE.put(key, frame)
+    return frame
 
 
 def zone_cover_df(
@@ -158,10 +204,11 @@ def zone_cover_df(
     of the membership join.  ``boundary=false`` rows prove membership
     by cell containment alone; ``boundary=true`` rows require the exact
     PIP test.  ``grain="hex"`` emits ``cell_hex{res}`` hexagonal cells
-    (hexgrid.hex7_polyfill) with the identical contract.
+    (hexgrid.hex7_polyfill) with the identical contract: only cells a
+    point can encode to, each (zone_id, cell) once — 83,471 rows for
+    ``ZONES`` at res 5.
     """
     zones = zones or ZONES
-    rows = _cover_rows(zones, res, grain)
     cell_col = f"cell_hex{res}" if grain == "hex" else f"cell_r{res}"
     schema = T.StructType(
         [
@@ -170,21 +217,19 @@ def zone_cover_df(
             T.StructField("boundary", T.BooleanType(), False),
         ]
     )
-    # Arrow path: a cover can be O(10^4) rows; per-tuple Python
-    # serialization in createDataFrame dominated plan-build latency.
     # The RESULTING DataFrame (a LocalRelation over the static zone
-    # catalog — a plan artifact, not query data) is also memoized per
-    # session: the pandas→Arrow→JVM conversion of a 366k-row hex cover
-    # costs ~0.5 s per query BUILD, paid on every plan construction
-    # without this (the cover rows above were already memoized; the
-    # conversion was not).
-    ckey = (_zones_key(zones), res, grain)
+    # catalog — a plan artifact, not query data) is also memoized, per
+    # session: the pandas→Arrow→JVM conversion is otherwise paid on
+    # every plan construction.  The key holds the session's id; a
+    # cached DataFrame references its session, so that id cannot be
+    # reused while the entry lives.
+    ckey = (id(spark), _zones_key(zones), res, grain)
     hit = _COVER_DF_CACHE.get(ckey)
-    if hit is not None and hit.sparkSession is spark:
+    if hit is not None:
         return hit
-    pdf = pd.DataFrame(rows, columns=["zone_id", cell_col, "boundary"])
+    pdf = _cover_frame(zones, res, grain).rename(columns={"cell": cell_col})
     df = spark.createDataFrame(pdf, schema)
-    _COVER_DF_CACHE[ckey] = df
+    _COVER_DF_CACHE.put(ckey, df)
     return df
 
 
@@ -290,7 +335,6 @@ def join_zones(
     lon_col: str = "lon",
     strategy: str = "auto",
     grain: str = "grid",
-    hex_encode: str = "row",
 ) -> DataFrame:
     """Attach ``zone_id`` to every point row (inner join semantics).
 
@@ -324,19 +368,9 @@ def join_zones(
         from geodata_spark import hexgrid as HG
 
         cell_col = f"cell_hex{res}"
-        # Both modes now encode in ONE pass over the input with the
-        # per-batch coordinate dedup inside hex7_id_udf (raster-sourced
-        # corpora repeat a small lattice, so the trig + digit walk runs
-        # once per unique coordinate per batch).  The round-7 "dim"
-        # mode (distinct → encode → broadcast join back) moved fewer
-        # rows through Python but RE-EXECUTED the entire upstream plan
-        # for its distinct branch — a second full synth+parse pass
-        # when the input is an inline generator rather than a cheap
-        # parquet rescan (measured +8s of the hex flagship's 19s at 2M
-        # docs, r8).  One pass + batch dedup keeps the Python work per
-        # unique coordinate without ever paying a second scan; the
-        # parameter is kept for API compatibility and both values are
-        # row-for-row identical (pinned by the zonal_wavg_hex oracle).
+        # one pass over the input; hex7_id_udf dedups coordinates per
+        # Arrow batch, so the trig + digit walk runs once per unique
+        # coordinate (raster-sourced corpora repeat a small lattice)
         pts = points.withColumn(
             cell_col, HG.hex7_id_udf(res)(F.col(lat_col), F.col(lon_col))
         )

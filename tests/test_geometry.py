@@ -163,3 +163,64 @@ def test_extract_zone_cells_expr_path_has_no_python_stage(spark):
     udf_df = spatial.extract_zone_cells(spark, ZONES, res=7, strategy="udf")
     rows = lambda df: sorted(map(tuple, df.collect()))
     assert rows(expr_df) == rows(udf_df)
+
+
+def test_cover_df_cache_keyed_by_session(spark):
+    """Two live sessions planning on one zone catalog each keep their
+    own cover DataFrame: alternating between them hits, never rebuilds."""
+    from geodata_spark import spatial
+
+    other = spark.newSession()
+    a = spatial.zone_cover_df(spark, ZONES, 3, grain="hex")
+    b = spatial.zone_cover_df(other, ZONES, 3, grain="hex")
+    assert a.sparkSession is spark and b.sparkSession is other
+    assert spatial.zone_cover_df(spark, ZONES, 3, grain="hex") is a
+    assert spatial.zone_cover_df(other, ZONES, 3, grain="hex") is b
+
+
+def test_cover_cache_lru_bounded():
+    """The cover caches keep only the most recently used entries."""
+    from geodata_spark import spatial
+
+    cache = spatial._LRU()
+    for n in range(3 * spatial._COVER_CACHE_SIZE):
+        cache.put((n,), n)
+        assert cache.get((0,)) == 0  # refreshed every round → survives
+    assert len(cache) == spatial._COVER_CACHE_SIZE
+    assert cache.get((1,)) is None
+
+
+def test_cover_cache_lru_thread_safe():
+    """Concurrent get/put from more threads than cores never raises and
+    never exceeds the bound (without the lock, a get can refresh a key
+    another thread has just evicted and raise KeyError)."""
+    import sys
+    import threading
+
+    from geodata_spark import spatial
+
+    cache = spatial._LRU()
+    errors = []
+
+    def work(t):
+        try:
+            for n in range(3000):
+                cache.put((t, n % 12), n)
+                cache.get((t, (n + 5) % 12))
+                cache.get(((t + 1) % 16, n % 12))
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:3]
+    assert len(cache) == spatial._COVER_CACHE_SIZE

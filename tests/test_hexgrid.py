@@ -350,27 +350,82 @@ def test_parent_expr_matches_numpy(spark):
     assert [r.t3 for r in got] == want_t3
 
 
+def _face_edge_band(n: int, res: int, rng) -> tuple[np.ndarray, np.ndarray]:
+    """Points within one res-``res`` lattice step either side of the
+    icosahedron edge from (0N, 121.7E) to (58.3N, 90E), around its
+    midpoint (30N, 110.9E) — where two faces' lattices meet."""
+    va, vb = H._VERTS[3], H._VERTS[7]
+    normal = np.cross(va, vb)
+    normal /= np.linalg.norm(normal)
+    along = np.cross(normal, va)  # unit tangent at va, toward vb
+    t = rng.uniform(0.3, 0.7, n) * np.arccos(va @ vb)
+    p = np.cos(t)[:, None] * va + np.sin(t)[:, None] * along
+    w = H._RES0_U * H._SQRT7 ** (-res)
+    d = rng.uniform(-w, w, n)
+    q = np.cos(d)[:, None] * p + np.sin(d)[:, None] * normal
+    return np.degrees(np.arcsin(q[:, 2])), np.degrees(np.arctan2(q[:, 1], q[:, 0]))
+
+
 def test_polyfill_membership_exact_large_zone():
-    """Regression for the face-enumeration margin: a LARGE (24-degree)
-    polygon whose bbox samples sit far apart must still produce an
-    exact cover — a fixed cell-size margin under-covers face-edge
-    straddling zones (the margin now scales with the sample spacing)."""
+    """Regression for the face-enumeration margin and the per-cell
+    reachability filter.  A LARGE (24-degree) polygon whose bbox samples
+    sit far apart must still produce an exact cover — a fixed cell-size
+    margin under-covers face-edge straddling zones (the margin scales
+    with the sample spacing).  A polygon straddling an icosahedron face
+    edge, probed densely in the one-cell band either side of the edge,
+    pins that dropping unreachable cells never drops a real one."""
     from geodata_spark import geometry
 
+    rng = np.random.default_rng(11)
     big = [np.array([
         [60.0, 10.0], [84.0, 12.0], [82.0, 34.0], [58.0, 30.0],
     ])]
-    full, bound = H.hex7_polyfill(big, 5)
-    fset, bset = set(full.tolist()), set(bound.tolist())
-    rng = np.random.default_rng(11)
-    pla = rng.uniform(8.0, 36.0, 6000)
-    plo = rng.uniform(56.0, 86.0, 6000)
-    truth = geometry.points_in_rings(plo, pla, big)
-    cells_ = H.hex7_id_np(pla, plo, 5)
-    for n in range(len(pla)):
-        c = int(cells_[n])
-        via = (c in fset) or ((c in bset) and bool(truth[n]))
-        assert via == bool(truth[n]), (pla[n], plo[n])
+    straddle = [np.array([
+        [106.0, 27.0], [115.5, 25.5], [116.0, 33.0], [107.5, 35.0],
+    ])]
+    bla, blo = _face_edge_band(60000, 5, rng)
+    assert len(np.unique(H._geo_to_face_xy(bla, blo)[0])) == 2
+    cases = [
+        (big, rng.uniform(8.0, 36.0, 6000), rng.uniform(56.0, 86.0, 6000)),
+        (straddle, bla, blo),
+    ]
+    for rings, pla, plo in cases:
+        full, bound = H.hex7_polyfill(rings, 5)
+        truth = geometry.points_in_rings(plo, pla, rings)
+        assert 0 < truth.sum() < len(truth)
+        cells_ = H.hex7_id_np(pla, plo, 5)
+        via = np.isin(cells_, full) | (np.isin(cells_, bound) & truth)
+        bad = np.nonzero(via != truth)[0]
+        assert len(bad) == 0, (pla[bad[:5]], plo[bad[:5]])
+
+
+def test_polyfill_cover_unique_and_representable(monkeypatch):
+    """Every hex cover row is a distinct (zone_id, cell), and every id
+    the polyfill packs decodes back to the (face, IJK) it was packed
+    from — no cell outside the 2-bit res-0 IJK field reaches
+    ``_pack_ijk`` (where clipping would alias it onto another cell)."""
+    from geodata_spark.spatial import ZONES
+
+    packed = []
+    pack = H._pack_ijk
+
+    def spy(face, i, j, k, res):
+        out = pack(face, i, j, k, res)
+        packed.append((out, face, *H._ijk_normalize(i, j, k)))
+        return out
+
+    monkeypatch.setattr(H, "_pack_ijk", spy)
+    for res in (3, 4, 5):
+        for zid, rings in ZONES.items():
+            packed.clear()
+            full, bound = H.hex7_polyfill(rings, res)
+            ids = np.concatenate([full, bound])
+            assert len(np.unique(ids)) == len(ids), (zid, res)
+            assert packed
+            for out, face, i, j, k in packed:
+                _, dface, di, dj, dk = H.hex7_decode_np(out)
+                same = (dface == face) & (di == i) & (dj == j) & (dk == k)
+                assert same.all(), (zid, res, int((~same).sum()))
 
 
 # Candidate-volume pins (VERDICT r6 "Next round" #6).  The hex join's
@@ -380,12 +435,12 @@ def test_polyfill_membership_exact_large_zone():
 # but would double shuffle volume at 100 TB.  Exact counts are pinned
 # so any such change fails loudly and must re-justify its cost here.
 POLYFILL_COVER_R5 = {
-    # zone: (full cells, boundary cells) at res 5
-    "north_rect": (93327, 8845),
-    "south_rect": (159182, 11497),
-    "east_tri": (46735, 5812),
-    "coast_l": (33580, 5121),
-    "islands": (1207, 1243),
+    # zone: (full cells, boundary cells) at res 5 — reachable, unique ids
+    "north_rect": (21756, 2389),
+    "south_rect": (20859, 2248),
+    "east_tri": (17510, 2542),
+    "coast_l": (12880, 2241),
+    "islands": (485, 561),
 }
 
 
@@ -445,22 +500,3 @@ def test_compact_uncompact_roundtrip_and_compression():
     one = full[:1]
     assert np.array_equal(H.hex7_compact_np(one), np.sort(one))
     assert np.array_equal(H.hex7_uncompact_np(one, 5), np.sort(one))
-
-
-def test_join_zones_hex_dim_encode_equivalence(spark):
-    """hex_encode="dim" (distinct-coordinate dimension + broadcast
-    join-back) returns exactly the row-encode result — same rows,
-    same multiplicity — on a lattice-bound point set."""
-    from pyspark.sql import functions as F
-
-    from geodata_spark.spatial import join_zones
-    from geodata_spark.synth import synth_grid_vars
-
-    pts = synth_grid_vars(spark, nhours=2, ny=20, nx=30,
-                          variables=("temperature",)) \
-        .select("lat", "lon", "temperature")
-    a = join_zones(pts, spark, res=5, grain="hex", hex_encode="row")
-    b = join_zones(pts, spark, res=5, grain="hex", hex_encode="dim")
-    ka = sorted((r.zone_id, r.lat, r.lon, r.temperature) for r in a.collect())
-    kb = sorted((r.zone_id, r.lat, r.lon, r.temperature) for r in b.collect())
-    assert ka == kb and len(ka) > 0
